@@ -29,7 +29,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from pyspark.sql import SparkSession
 
-    from kgforge.pipeline_log import run_log
+    from kgforge.pipeline_log import read_entries, run_log
 
     spark = SparkSession.getActiveSession()
     if spark is None:
@@ -42,8 +42,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.validate:
         from kgforge.endpoint import validate_entries
 
-        entries = spark.read.parquet(f"{args.out}/entries")
-        validated = validate_entries(entries)
+        validated = validate_entries(read_entries(spark, args.out))
         validated.write.mode("overwrite").partitionBy("ds").parquet(
             f"{args.out}/entries_validated"
         )

@@ -32,31 +32,10 @@ from pyspark.sql import functions as F
 from kgforge.catalog import ParquetCatalog
 from kgforge.checkpoint import PID_COL, CheckpointStore, with_pid
 from kgforge.corpus import entity_dict_rows
+from kgforge.observe import obs_get
 from kgforge.operators.extract import extract_parse_sink, prefilter, with_content_sha
 from kgforge.operators.linking import corpus_context_priors, link_terms
 from kgforge.operators.triples import explode_tps, graph_triples, write_graph
-
-
-def _obs_get(obs, key: str) -> int:
-    """Observation value after the observed action completed.  Narrow except
-    (ADVICE round 2): the two benign misses are a missing key and a ZERO-TASK
-    action (empty input -> no task ever ran -> no metrics row materialized;
-    Observation.get then raises a Py4J "assertion failed" from toPyRow rather
-    than blocking).  Anything else (analysis error, interrupted job) must
-    propagate rather than silently read as a 0-valued metric.
-
-    ADVICE round 3 narrowing: require the JVM exception CLASS
-    (java.lang.AssertionError) alongside the message, so an unrelated Py4J
-    error whose text merely contains 'assertion failed' still propagates."""
-    try:
-        return int(obs.get[key])
-    except KeyError:
-        return 0
-    except Exception as exc:
-        msg = str(exc)
-        if "java.lang.AssertionError" in msg and "assertion failed" in msg:
-            return 0  # zero-task action: no metrics row exists
-        raise
 
 
 ATTEMPT_COL = "kg_attempt"
@@ -192,7 +171,7 @@ def run_stage1(
         {int(r["kg_pid"]) for r in task_rows if r["kg_pid"] >= 0}
     )
     metrics["t_parse_write_s"] = round(time.time() - t0, 2)
-    metrics["n_pending"] = _obs_get(obs, "n_in")
+    metrics["n_pending"] = obs_get(obs, "n_in")
 
     def commit() -> None:
         t = time.time()
@@ -424,8 +403,8 @@ def run_stage2(
             "n_parse_ok": int(agg_row["n_parse_ok"] or 0),
             "n_distinct_bgps": int(agg_row["n_bgps"] or 0),
             # measured during the writes themselves (observe), not re-count jobs
-            "n_fixture_triples": _obs_get(obs_fx, "n"),
-            "n_graph_triples": _obs_get(obs_graph, "n"),
+            "n_fixture_triples": obs_get(obs_fx, "n"),
+            "n_graph_triples": obs_get(obs_graph, "n"),
         }
     )
     return metrics
