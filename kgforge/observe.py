@@ -7,7 +7,7 @@ Both pipelines count rows DURING the action that already scans them
 from __future__ import annotations
 
 
-def obs_get(obs, key: str, missing: int | None = 0) -> int | None:
+def obs_get(obs, key: str) -> int:
     """Observation value after the observed action completed.  Narrow except
     (ADVICE round 2): the benign misses are a missing key, a NULL value (a
     SUM over zero rows) and a ZERO-TASK action (empty input -> no task ever
@@ -18,20 +18,13 @@ def obs_get(obs, key: str, missing: int | None = 0) -> int | None:
 
     ADVICE round 3 narrowing: require the JVM exception CLASS
     (java.lang.AssertionError) alongside the message, so an unrelated Py4J
-    error whose text merely contains 'assertion failed' still propagates.
-
-    ``missing`` is returned when no metrics row exists.  That is a zero only
-    when the observed rows really were none: AQE also drops an observation
-    whose shuffle stage turned out empty (AQEPropagateEmptyRelation replaces
-    the stage, and the observed node with it), so a caller that observes
-    rows upstream of a filter and a shuffle passes ``missing=None`` and
-    counts another way when it gets it back."""
+    error whose text merely contains 'assertion failed' still propagates."""
     try:
         return int(obs.get[key] or 0)
     except KeyError:
-        return missing
+        return 0
     except Exception as exc:
         msg = str(exc)
         if "java.lang.AssertionError" in msg and "assertion failed" in msg:
-            return missing  # no metrics row exists
+            return 0  # zero-task action: no metrics row exists
         raise

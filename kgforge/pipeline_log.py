@@ -129,11 +129,10 @@ def run_log(
     )
     stats.write.mode("overwrite").parquet(f"{out_dir}/stats")
 
-    n_lines = obs_get(obs_lines, "n", missing=None)
-    if n_lines is None:
-        # no hits: AQE replaced the empty window stage and the observed
-        # count with it, so the log is counted by a (JVM-only) re-scan
-        n_lines = read_apache_log(spark, log_path).count()
+    # a 0 can mean the observation was dropped: with no hits AQE replaces
+    # the empty window stage, and the observed count with it, so the log is
+    # then counted by a (JVM-only) re-scan
+    n_lines = obs_get(obs_lines, "n") or read_apache_log(spark, log_path).count()
     return {
         "n_lines": n_lines,
         "n_hits": obs_get(obs_stats, "hits"),
